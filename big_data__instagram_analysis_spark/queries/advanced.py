@@ -1985,12 +1985,14 @@ def hll_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus three sketch passes and the union re-scan. Now ONE corpus pass
     builds the distinct (type, user) table (lazily checkpointed, a few
     hundred rows); both sketches ride it (HLL register updates are
-    idempotent, so sketch(distinct stream) ≡ sketch(raw stream)
-    bit-for-bit), the union estimate is hll_union sketch-MERGE (register
-    max ≡ single-pass union sketch — the mergeability this query
-    showcases), the exacts are two tiny aggregates (intersection = users
-    holding both type rows), and everything lands lazily via the house
-    1-row crossJoin scalars — no eager job at construction.
+    idempotent, so sketch(distinct stream) and sketch(raw stream) are
+    estimate-equivalent within the sketch's own error), the union estimate
+    is hll_union sketch-MERGE (register max, estimate-equivalent to a
+    single-pass union sketch within the sketch's own error — the
+    mergeability this query showcases), the exacts are two tiny aggregates
+    (intersection = users holding both type rows), and everything lands
+    lazily via the house 1-row crossJoin scalars — no eager job at
+    construction.
     """
     e = load(spark, sf_dir, "events")
     ue = (

@@ -258,7 +258,7 @@ def test_json_extract_k_fastpath_matches_from_json_adversarial(spark):
     a pure from_json parse on every hostile props shape — nested objects,
     float/string/null values, int32 overflow, lookalike keys, malformed
     JSON, NULL — not just the flat fixture grammar. This pins the exactness
-    argument in the query docstring (tools/ab_json_extract_r11.py)."""
+    argument in the json_extract_k docstring (queries/core.py)."""
     from pyspark.sql import functions as F
 
     adv = spark.createDataFrame(

@@ -13,12 +13,12 @@ With --write-budget, records the measured times as the new baseline.
 """
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
-import duckdb
 
 ap = argparse.ArgumentParser()
 ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -55,12 +55,11 @@ assert len(rows) > 0
 
 # 2. correctness at --sf, driver-style
 sf = args.sf
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+from big_data__instagram_analysis_spark.oracle import compare_frames, duck_connect
+
+con = duck_connect(sf)
 qs, os_ = entrymod.queries(), entrymod.oracle_sql()
 print("declared queries:", len(qs), "with oracle:", len(os_), "sf:", sf)
-from big_data__instagram_analysis_spark.oracle import compare_frames
 
 budgets = json.load(open(args.budget)) if args.budget else {}
 fails = 0
@@ -108,9 +107,7 @@ if args.write_budget:
     # other query's budget, turning the time-budget gate off for them.
     out_budget = measured
     if args.only:
-        import os as _os
-
-        if _os.path.exists(args.write_budget):
+        if os.path.exists(args.write_budget):
             with open(args.write_budget) as fh:
                 out_budget = json.load(fh)
             out_budget.update(measured)
@@ -121,6 +118,7 @@ if args.write_budget:
                   "have no budget until a full run rewrites it")
     with open(args.write_budget, "w") as fh:
         json.dump(out_budget, fh, indent=1, sort_keys=True)
+        fh.write("\n")
     print("wrote budget baseline:", args.write_budget)
 
 print("FAILS:", fails)

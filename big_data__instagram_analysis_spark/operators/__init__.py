@@ -7,8 +7,10 @@ never a driver-side loop — so it distributes at 100 TB:
                     last-value window, no UDF
     bloom.py        Bloom-filter semi-join pruning
     clustering.py   Lloyd k-means (broadcast centroids)
-    dedup.py        exact / MinHash-LSH / SimHash / n-gram Jaccard /
-                    asymmetric containment dedup
+    dedup.py        exact dedup, SimHash, and the two near-dup pair cores:
+                    shared-shingle overlap (n-gram Jaccard / containment /
+                    integer-ppm projections) and MinHash-LSH with exact
+                    verify
     enumerate.py    global row enumeration without a single-partition window
     graph.py        connected components (large-star/small-star), PageRank,
                     component attachment
@@ -24,8 +26,10 @@ custom-operator surface from one import.
 from .asof import asof_join, asof_join_nearest  # noqa: F401
 from .dedup import (  # noqa: F401
     exact_dedup,
+    minhash_lsh_pairs,
     ngram_containment_pairs,
     ngram_jaccard_pairs,
+    shared_shingle_pairs,
     simhash,
 )
 from .graph import (  # noqa: F401

@@ -208,7 +208,8 @@ def self_join_cohour_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with 1M co-active users would expand to 5e11 rows; the closed form is
     one distinct + one count, linear at any scale. Buckets need n >= 2 to
     emit, matching the join form (a pair requires two users); the pair
-    count is exact integer math.
+    count is exact integer math. tests/test_properties.py runs the join
+    form in Spark and pins row equality with this one.
     """
     e = load(spark, sf_dir, "events")
     hourly = e.select(

@@ -10,10 +10,16 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..operators.dedup import (
+    MINHASH_TABLES,
     SIMHASH_BITS,
     exact_dedup,
+    minhash_lsh_pairs,
+    ngram_containment_pairs,
     ngram_jaccard_pairs,
     normalize_text,
+    shared_shingle_pairs,
+    shingle_pair_ppm,
+    shingle_rows,
     simhash,
     simhash_neardup_pairs,
 )
@@ -245,13 +251,6 @@ def simhash_neardup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_neardup_pairs(sh, max_hamming=3)
 
 
-#: MinHash tables for the banded candidate join. With 1-row bands the miss
-#: probability for a true pair of Jaccard s is (1-s)^N_TABLES — 0.39% at the
-#: 0.5 threshold boundary, vanishing for real near-dups (0.8 → 2.6e-6);
-#: recall is CERTIFIED by the oracle rows_match, not assumed.
-MINHASH_TABLES = 8
-
-
 @query(
     "minhash_lsh_neardup",
     tags=("llm_bench",),
@@ -284,31 +283,9 @@ WHERE shared * 1.0 / (x.n_sh + y.n_sh - shared) >= 0.5
 )
 def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs in pure DataFrame algebra, CERTIFIED
-    against exact Jaccard.
-
-    The scale path for Jaccard dedup — banding makes candidate generation
-    sub-quadratic (only bucket-collision pairs meet):
-
-      1. shingle WITHOUT the in-row HOF chain (transform/concat_ws over
-         arrays is interpreted, measured ~5 s/pass at sf0.1): posexplode
-         tokens → window ``lead(t,1)/lead(t,2)`` per doc → concat — one
-         doc-keyed shuffle, whole-stage codegen, and the (doc, shingle)
-         ROWS feed every later stage (no array column anywhere);
-      2. per (doc, shingle) compute ``xxhash64(shingle, i)`` for
-         i < MINHASH_TABLES; ONE groupBy(doc_id) takes the 8 per-table
-         minima → an 8-long signature row per doc (map-side partial min);
-      3. unpivot signatures to (doc, band, val) and equi-join on
-         (band, val) — the shuffle key is the band bucket, so only
-         same-bucket docs ever meet (never |N|²), skew splittable by AQE;
-      4. prune candidates that CANNOT clear the threshold (size-ratio
-         bound 2·min(na,nb) ≥ max(na,nb) — exact, not heuristic), then
-         verify the rest EXACTLY via shared-shingle counts: candidate
-         pairs join the (doc, shingle) rows on doc_a (shuffled-hash,
-         building on the pruned CAND side) then equi-join on
-         (doc_b, shingle) (shuffled-hash building on the shingle slice —
-         the expansion is the big side and SMJ would sort it), count per
-         pair, Jaccard = shared/(na+nb-shared) from exact integer
-         counts, filtered ≥ 0.5.
+    against exact Jaccard: a projection of operators/dedup.py
+    :func:`minhash_lsh_pairs` (signatures → band join → size-ratio prune →
+    exact verify) over the document shingle rows.
 
     Rounds 1-3 used pyspark.ml's MinHashLSH.approxSimilarityJoin — same
     banding structure but measured 10 s of the query's 11.4 s at sf0.1
@@ -331,120 +308,20 @@ def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sampling/recall statistics are additionally property-tested in
     tests/test_properties.py against ngram_jaccard_pairs ground truth.
     """
-    from ..operators.dedup import shingle_rows
-
     d = load(spark, sf_dir, "documents")
-    # Three consumers read the (doc, shingle) rows (the fused stats agg and
-    # both sides of the exact-verify join); lazily localCheckpoint the
-    # frame so they share ONE materialization instead of re-running the
-    # scan+window shingling per lineage branch (the winnow/CC idiom;
-    # ABAB-measured ~10% at sf0.1: 3.03→2.74 s). Storage is the block
-    # manager's memory-and-disk tier, so at 100 TB this is a deliberate
-    # disk-spill-for-recompute trade on a frame reused four times.
-    sh_ex = shingle_rows(d, n=3).localCheckpoint(eager=False)
-    # ONE groupBy(doc_id) computes the 8 per-table minima AND the shingle
-    # count, and n_sh rides along the band rows into the candidate pairs —
-    # round 8 removed the separate sizes aggregation (a fourth full pass
-    # over the shingle frame) and the two sizes equi-joins that used to
-    # finish the query: the exact-Jaccard denominator now falls out of the
-    # candidate row itself (8 extra bytes per band row, nothing at scale).
-    stats = sh_ex.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"m{i}")
-            for i in range(MINHASH_TABLES)
-        ],
-    )
-    bands = stats.select(
-        "doc_id",
-        "n_sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"), F.col(f"m{i}").alias("val")
-                    )
-                    for i in range(MINHASH_TABLES)
-                ]
-            )
-        ).alias("bv"),
-    ).select(
-        "doc_id", "n_sh", F.col("bv.band").alias("band"), F.col("bv.val").alias("val")
-    )
-
-    a, b = bands.alias("a"), bands.alias("b")
-    # shuffle_hash (round 10, was merge): both band sides grow with the
-    # corpus (8 rows/doc), so broadcast is never right at scale — the
-    # checkpointed frames' static estimates run ~50x under true size,
-    # which statically picked a broadcast AQE cannot demote (the x10
-    # parity run on a default-1g driver OOM'd in the sa⋈sh_ex build;
-    # round 8). Between the shuffle strategies, SHJ skips the sort and
-    # its build side holds only the PER-PARTITION band slice (|bands|/P
-    # rows — the same boundedness as any hash agg; AQE skew-split
-    # applies), ABAB-measured −0.2 s at sf0.1 and green at the ×10 tier.
-    cand = (
-        a.hint("shuffle_hash")
-        .join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .distinct()
-        # Size-ratio prefilter (round 9): J = shared/(na+nb−shared) ≥ 0.5
-        # with shared ≤ min(na,nb) forces 2·min(na,nb) ≥ max(na,nb), so a
-        # candidate violating it CANNOT clear the threshold — a rigorous
-        # prune, not a heuristic (ties kept; the oracle pair set is
-        # untouched). It's free — na/nb already ride on the candidate row —
-        # and cuts the verify expansion ~29% at sf0.1 (hub-bucket pairs
-        # join dissimilar-length docs). ABAB-measured with the SHJ switch
-        # below: 2.66 → 1.69 s at sf0.1 (PERF.md §52).
-        .where(F.least("na", "nb") * 2 >= F.greatest("na", "nb"))
-    )
-
-    # (r8 counter-measurement: semi-joining sh_ex down to candidate docs
-    # before the verify joins read 3.0-4.0 s vs 2.8 s here — the semi either
-    # re-ran per branch or forced an extra materialization barrier; the
-    # direct form below stays.)
-    #
-    # shuffle_hash (round 9, was merge): the verify expansion (cand ×
-    # doc_a's shingles, ~4-5M skinny rows at sf0.1) is the query's largest
-    # intermediate, and SMJ had to SORT it on (doc_b, s) — the dominant
-    # cost in the ABAB profile. A shuffled-hash join builds on the
-    # shingle-frame side (the hint target), whose per-partition slice is
-    # bounded by shuffle partitioning exactly like any hash-agg table —
-    # NOT a broadcast (the r8 OOM was a statically-sized broadcast of the
-    # whole frame; SHJ holds |sh_ex|/P rows per task, AQE skew-split
-    # applies) — and streams the big expansion side unsorted.
-    # Build on CAND (round 10, was the shingle side): the hash map then
-    # holds the pruned candidate pairs (4.5x fewer rows than the shingle
-    # slice at sf0.1; still per-partition-bounded at scale) while the
-    # shingle rows stream through as probes — ABAB-measured −0.27 s.
-    sa = cand.hint("shuffle_hash").join(
-        sh_ex.select(F.col("doc_id").alias("doc_a"), "s"),
-        "doc_a",
-    )
-    shared = (
-        sa.join(
-            sh_ex.select(F.col("doc_id").alias("doc_b"), "s").hint("shuffle_hash"),
-            ["doc_b", "s"],
-        )
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    exact_jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+    # The core reads the (doc, shingle) rows three times (the fused stats
+    # agg and both verify joins); lazily localCheckpoint the frame so they
+    # share ONE materialization instead of re-running the scan+shingling
+    # per lineage branch (ABAB-measured ~10% at sf0.1: 3.03→2.74 s).
+    # Storage is the block manager's memory-and-disk tier, so at 100 TB
+    # this is a deliberate disk-spill-for-recompute trade.
+    sh = shingle_rows(d, n=3).localCheckpoint(eager=False)
     return (
-        shared.where(exact_jac >= 0.5)
+        minhash_lsh_pairs(sh, sh)
         .select(
             "doc_a",
             "doc_b",
-            F.round(exact_jac, 6).alias("jaccard"),
+            F.round(F.expr("shared / (na + nb - shared)"), 6).alias("jaccard"),
             F.lit(True).alias("lsh_found"),
         )
         .orderBy("doc_a", "doc_b")
@@ -648,8 +525,6 @@ def containment_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-quadratic, skew-splittable.
     """
     d = load(spark, sf_dir, "documents")
-    from ..operators.dedup import ngram_containment_pairs
-
     return ngram_containment_pairs(d, n=3, threshold=0.8).orderBy(
         "doc_small", "doc_big"
     )
@@ -707,31 +582,11 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     to end (shared*1000 DIV union): no float bucket-boundary flakiness by
     construction.
     """
-    from ..operators.dedup import shingle_rows
-
     d = load(spark, sf_dir, "documents")
-    sh = (
-        shingle_rows(d, n=3)
-        .select(F.col("doc_id").alias("doc"), "s")
-        # 3 consumers share one materialization (see minhash note above)
-        .localCheckpoint(eager=False)
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    # merge hint: big-big shingle self-join (operators/dedup.py rationale, r8)
-    shared = (
-        a.hint("merge")
-        .join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    pm = (
-        shared.join(sa, F.col("doc_a") == F.col("sa.doc"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc"))
-        .select(
-            F.expr("shared * 1000 DIV (sa.n_sh + sb.n_sh - shared)").alias("jac_pm")
-        )
+    # 3 consumers share one materialization (see minhash_lsh_neardup)
+    sh = shingle_rows(d, n=3).localCheckpoint(eager=False)
+    pm = shared_shingle_pairs(sh, sh).select(
+        F.expr("shared * 1000 DIV (na + nb - shared)").alias("jac_pm")
     )
     return (
         pm.groupBy(F.expr("least(9, jac_pm DIV 100)").cast("long").alias("decile"))
@@ -911,8 +766,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set (sub-quadratic by the shared-shingle equi-join), and
     the matrix itself is ≤ |sources|² rows.
     """
-    from ..operators.dedup import shingle_pair_ppm
-
     d = load(spark, sf_dir, "documents")
     pairs = shingle_pair_ppm(d, n=3).where("is_edge").select(
         "doc_a", "doc_b", "jac_ppm"
@@ -1017,14 +870,13 @@ def neardup_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     low intra min_jac_ppm — the quantified cost of clustering by CC.
 
     Zero NEW pair machinery: the candidate set and ppm are the L2
-    shared-shingle family (one shingle-keyed SHJ + size joins), the
+    shared-shingle family (operators/dedup.py shingle_pair_ppm), the
     components come from operators/graph.py (large-star/small-star,
     O(log n) rounds), and the labeling is two joins against the ≤|docs|
     component map. Every emitted stat is integer-exact (ppm
     multiply-then-div, mean as sum div count) — no float agg anywhere.
     The output is ≤ 2 rows.
     """
-    from ..operators.dedup import shingle_pair_ppm
     from ..operators.graph import attach_components
 
     d = load(spark, sf_dir, "documents")
@@ -1131,55 +983,42 @@ def ngram_jaccard_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     results stay comparable to ngram_jaccard_neardup while the ×10 tier
     exercises the pruned path.
     """
-    from pyspark.sql.window import Window as _W
-
-    from ..operators.dedup import shingle_rows
-
-    d = load(spark, sf_dir, "documents")
-    sh = shingle_rows(d, n=3)
-    # r13 (guide §2.3/§3.2): carry df through the checkpoint so the
-    # self-join sides can ALSO drop df==1 shingles — a shingle occurring in
-    # exactly one document can never produce a pair (it joins only itself
-    # and fails doc_a < doc_b), so excluding it before the exchange is
-    # free row reduction on both shuffled join inputs. The window computes
-    # df anyway for the cap, so this costs nothing; `sizes` keeps ALL
-    # capped shingles (df==1 included) — the Jaccard denominator is
-    # unchanged. Measured fractions of shingle rows removed from the join
-    # shuffle: 0.08% at sf0.1 (wall-neutral, this corpus's shingles are
-    # dense), 36% at sf0.01; real crawl corpora run 60-90% unique
-    # shingles, which is where the shuffle savings land at 100 TB.
-    keep = (
-        sh.withColumn("df", F.count(F.lit(1)).over(_W.partitionBy("s")))
-        .where(F.col("df") <= NGRAM_DF_CAP)
-        .select("doc_id", "s", "df")
-        .localCheckpoint(eager=False)
-    )
-    sizes = keep.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    pairable = keep.where(F.col("df") >= 2)
-    a = pairable.select(F.col("doc_id").alias("doc_a"), "s")
-    b = pairable.select(F.col("doc_id").alias("doc_b"), "s")
-    shared = (
-        a.join(b.hint("shuffle_hash"), "s")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    keep = _df_capped_shingles(spark, sf_dir)
     return (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")),
-            "doc_b",
-        )
-        .where(F.col("shared") * 2 >= F.col("na") + F.col("nb") - F.col("shared"))
+        shared_shingle_pairs(keep, keep.where(F.col("df") >= 2))
+        .where(F.expr("shared * 2 >= na + nb - shared"))
         .select(
             "doc_a",
             "doc_b",
             F.expr("shared * 1000000 div (na + nb - shared)").alias("jac_ppm"),
         )
         .orderBy("doc_a", "doc_b")
+    )
+
+
+def _df_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The document shingle rows with df ≤ NGRAM_DF_CAP, as (doc_id, s, df),
+    lazily localCheckpointed — the capped shingle space E274 and E277 both
+    pair over. df is one count window over the shingle-keyed exchange (no
+    extra join).
+
+    r13 (guide §2.3/§3.2): df rides through the checkpoint so both
+    callers can pass the pair cores a ``df >= 2`` slice as the rows to
+    pair: a shingle occurring in exactly one document can never produce a
+    pair (it joins only itself and fails doc_a < doc_b), so dropping it
+    before the join exchanges is free row reduction, while sizes (and
+    MinHash signatures) still read ALL capped shingles — denominators and
+    minima are unchanged. Measured fractions of shingle rows removed from
+    the join shuffle: 0.08% at sf0.1 (wall-neutral, this corpus's
+    shingles are dense), 36% at sf0.01; real crawl corpora run 60-90%
+    unique shingles, which is where the savings land at 100 TB.
+    """
+    return (
+        shingle_rows(load(spark, sf_dir, "documents"), n=3)
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("s")))
+        .where(F.col("df") <= NGRAM_DF_CAP)
+        .select("doc_id", "s", "df")
+        .localCheckpoint(eager=False)
     )
 
 
@@ -1277,8 +1116,6 @@ def dedup_governance_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.py — shared with E272/E273) + two dim joins + an explode-free
     two-arm union keyed by source. Everything emitted is integer-exact.
     """
-    from ..operators.dedup import normalize_text, shingle_pair_ppm
-
     d = load(spark, sf_dir, "documents")
     n_tok = F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit("")))
     t = d.select(
@@ -1331,7 +1168,7 @@ def dedup_governance_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("sa", "sb")
     )
     # Round 13 (guide §1.2): the two-arm union replayed the whole pair
-    # machinery (shingle explode + SHJ + sizes joins) once per arm; a
+    # machinery (shingle explode + self-join + sizes joins) once per arm; a
     # conditional in-row explode emits the same endpoint multiset — self
     # pairs once, cross pairs once per endpoint — from ONE pass.
     both = F.when(
@@ -1480,8 +1317,6 @@ def minhash_banding_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan shape is the same band-bucket equi-join as the scale path (never
     |N|^2), so the sample size only scales the constant.
     """
-    from ..operators.dedup import shingle_pair_ppm, shingle_rows
-
     d = load(spark, sf_dir, "documents")
     sh = shingle_rows(d, text_col="text", id_col="doc_id").localCheckpoint(
         eager=False
@@ -1543,11 +1378,11 @@ def minhash_banding_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     truth = (
-        # r12: pass the already-checkpointed shingle frame — the ground
-        # truth uses the IDENTICAL (doc_id, s) rows the signatures were
-        # built from, so the scan+shingle pass runs once, not twice.
-        shingle_pair_ppm(d, text_col="text", id_col="doc_id", shingles=sh)
-        .where(F.col("is_edge"))
+        # r12: the ground truth pairs the IDENTICAL checkpointed (doc_id, s)
+        # rows the signatures were built from, so the scan+shingle pass
+        # runs once, not twice.
+        shared_shingle_pairs(sh, sh)
+        .where(F.expr("shared * 2 >= na + nb - shared"))
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=False)  # read by the scalar agg + the hit join
     )
@@ -1660,83 +1495,9 @@ def minhash_lsh_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the variant you run — real crawls are boilerplate-heavy — with the cap
     set from a df histogram (E274 note), not a constant.
     """
-    from pyspark.sql.window import Window as _W
-
-    from ..operators.dedup import shingle_rows
-
-    d = load(spark, sf_dir, "documents")
-    keep = (
-        shingle_rows(d, n=3)
-        .withColumn("df", F.count(F.lit(1)).over(_W.partitionBy("s")))
-        .where(F.col("df") <= NGRAM_DF_CAP)
-        .select("doc_id", "s", "df")
-        .localCheckpoint(eager=False)  # stats agg + both verify joins
-    )
-    stats = keep.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"m{i}")
-            for i in range(MINHASH_TABLES)
-        ],
-    )
-    bands = stats.select(
-        "doc_id",
-        "n_sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"), F.col(f"m{i}").alias("val")
-                    )
-                    for i in range(MINHASH_TABLES)
-                ]
-            )
-        ).alias("bv"),
-    ).select(
-        "doc_id", "n_sh", F.col("bv.band").alias("band"), F.col("bv.val").alias("val")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.hint("shuffle_hash")
-        .join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .distinct()
-        .where(F.least("na", "nb") * 2 >= F.greatest("na", "nb"))
-    )
-    # r13 (guide §2.3/§3.2): the verify joins intersect the two docs'
-    # shingle sets, and a df==1 shingle exists in ONE document only — it
-    # can never survive the (doc_b, s) join — so both verify sides drop it
-    # BEFORE their exchanges (free: the cap window computed df anyway).
-    # Signatures and n_sh above still use ALL capped shingles (df==1
-    # included): minima and Jaccard denominators are unchanged. Join-side
-    # row reduction: 0.08% at sf0.1 / 36% at sf0.01 / 60-90% on real
-    # unique-shingle-heavy crawls (the 100 TB case this variant exists for).
-    pairable = keep.where(F.col("df") >= 2)
-    sa = cand.hint("shuffle_hash").join(
-        pairable.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a"
-    )
-    shared = (
-        sa.join(
-            pairable.select(F.col("doc_id").alias("doc_b"), "s").hint("shuffle_hash"),
-            ["doc_b", "s"],
-        )
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    keep = _df_capped_shingles(spark, sf_dir)
     return (
-        shared.where(
-            F.col("shared") * 2 >= F.col("na") + F.col("nb") - F.col("shared")
-        )
+        minhash_lsh_pairs(keep, keep.where(F.col("df") >= 2))
         .select(
             "doc_a",
             "doc_b",
@@ -1843,7 +1604,6 @@ def dedup_governance_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed large/small-star components against SQL transitive
     closure, plus every ppm digit.
     """
-    from ..operators.dedup import shingle_pair_ppm
     from ..operators.graph import attach_components
 
     d = load(spark, sf_dir, "documents")
@@ -1859,8 +1619,6 @@ def dedup_governance_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form below (exactly the oracle's `surv` CTE shape) selects survivors
     # in place: ONE content-hash exchange total, no join. Survivor = min
     # doc_id per hash, identical to exact_dedup's row_number()=1 pick.
-    from ..operators.dedup import normalize_text
-
     hw = Window.partitionBy("h")
     s = (
         base.withColumn(

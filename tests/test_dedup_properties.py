@@ -10,7 +10,7 @@ generator; one Spark job per example keeps the count small.
 from __future__ import annotations
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -130,13 +130,20 @@ _JWORDS = ["join", "scan", "merge", "hash", "row", "batch", "sort", "key"]
         max_size=10,
     )
 )
+# Jaccard exactly 0.5 (2 shared of 3 + 3 shingles) with equal set sizes:
+# pins the is_edge boundary and the doc_small tiebreak on every run.
+@example(texts=["join scan merge hash row", "join scan merge hash batch"])
 def test_ngram_jaccard_pairs_vs_bruteforce(spark, texts):
     """The shared-shingle equi-join must return exactly the pairs (and
     exactly the Jaccard values) a brute-force python shingle comparison
     computes — the operator every near-dup family leans on as ground
-    truth deserves its own independent oracle."""
+    truth deserves its own independent oracle. The same examples check
+    the containment and integer-ppm projections of the shared pair core
+    against the same brute-force shingle sets."""
     from big_data__instagram_analysis_spark.operators.dedup import (
+        ngram_containment_pairs,
         ngram_jaccard_pairs,
+        shingle_pair_ppm,
     )
 
     df = spark.createDataFrame(
@@ -162,6 +169,39 @@ def test_ngram_jaccard_pairs_vs_bruteforce(spark, texts):
                     if j >= 0.3:
                         expected[(a, b)] = round(j, 6)
     assert got == expected, (got, expected)
+
+    # Every pair sharing >= 1 shingle: (doc_a, doc_b) -> (inter, na, nb).
+    overlap = {
+        (a, b): (len(sh[a] & sh[b]), len(sh[a]), len(sh[b]))
+        for a in sh
+        for b in sh
+        if a < b and sh[a] & sh[b]
+    }
+
+    got_c = {
+        (r.doc_small, r.doc_big): (r.containment, r.jaccard)
+        for r in ngram_containment_pairs(df, n=3, threshold=0.5).collect()
+    }
+    want_c = {}
+    for (a, b), (inter, na, nb) in overlap.items():
+        if inter / min(na, nb) >= 0.5:
+            # The smaller shingle set is the contained side; ties go to a.
+            small, big = (a, b) if na <= nb else (b, a)
+            want_c[(small, big)] = (
+                round(inter / min(na, nb), 6),
+                round(inter / (na + nb - inter), 6),
+            )
+    assert got_c == want_c, (got_c, want_c)
+
+    got_p = {
+        (r.doc_a, r.doc_b): (r.jac_ppm, r.is_edge)
+        for r in shingle_pair_ppm(df, n=3).collect()
+    }
+    want_p = {
+        k: (inter * 10**6 // (na + nb - inter), 2 * inter >= na + nb - inter)
+        for k, (inter, na, nb) in overlap.items()
+    }
+    assert got_p == want_p, (got_p, want_p)
 
 
 @given(
@@ -436,7 +476,7 @@ def test_neardup_cluster_quality_matches_python(spark, sf_dir):
     shingle sets → candidate pairs (≥1 shared shingle) → integer ppm →
     threshold edges → union-find components → intra/cross labeling →
     per-class stats. Independent of every Spark operator involved
-    (shingle_rows, the SHJ pair join, large-star/small-star CC)."""
+    (shingle_rows, the shared-shingle pair join, large-star/small-star CC)."""
     from big_data__instagram_analysis_spark.queries.llm_dedup import (
         neardup_cluster_quality,
     )

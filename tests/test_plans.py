@@ -580,12 +580,18 @@ def test_corpus_pair_joins_never_broadcast_the_shingle_frame(spark, sf_dir):
     statically chosen broadcast cannot be demoted by AQE — at the x10 tier
     this OOM'd a default-size driver. The big-big pair joins are merge-
     hinted; a refactor that drops the hint re-opens the scale hazard while
-    still passing parity, so pin the physical shape here."""
+    still passing parity, so pin the physical shape here. Every consumer of
+    operators/dedup.py shared_shingle_pairs whose plan shows the shingle
+    self-join is listed: one core, one merge-hinted join."""
     for name, min_smj in [
         ("ngram_jaccard_neardup", 1),
         ("containment_neardup_pairs", 1),
         ("winnow_match_pairs", 1),
         ("boilerplate_ngram_flags", 1),
+        ("source_overlap_matrix", 1),
+        ("dedup_governance_rollup", 1),
+        ("ngram_jaccard_dfcap", 1),
+        ("neardup_threshold_sweep", 1),
     ]:
         plan = _plan(spark, sf_dir, name)
         assert plan.count("SortMergeJoin") >= min_smj, (name, plan[:600])
@@ -764,9 +770,9 @@ def test_vocab_joins_respect_broadcast_threshold(spark, sf_dir):
 def test_governance_pair_family_plan_shape(spark, sf_dir):
     """The three shingle_pair_ppm consumers (E272/E273/E275) must keep the
     scale shape of the shared pair block: the shingle self-join is a
-    ShuffledHashJoin (both sides grow with the corpus — broadcast would
-    OOM, sort-merge pays two corpus-scale sorts), and no cartesian
-    product anywhere."""
+    SortMergeJoin (both sides grow with the corpus — broadcast would OOM,
+    and an SHJ build map cannot spill where SMJ does, PERF.md §50/§54),
+    and no cartesian product anywhere."""
     for name in (
         "source_overlap_matrix",
         "neardup_cluster_quality",
@@ -775,10 +781,10 @@ def test_governance_pair_family_plan_shape(spark, sf_dir):
         plan = _plan(spark, sf_dir, name)
         # neardup_cluster_quality lazily localCheckpoints the pair frame,
         # so its downstream plan truncates at the checkpoint scan and the
-        # SHJ lives in the (already-pinned) upstream block — assert it
+        # SMJ lives in the (already-pinned) upstream block — assert it
         # only where the pair block is visible in the same plan tree.
         if name != "neardup_cluster_quality":
-            assert "ShuffledHashJoin" in plan, f"{name}: shingle SHJ missing"
+            assert "SortMergeJoin" in plan, f"{name}: shingle SMJ missing"
         assert "CartesianProduct" not in plan, f"{name}: cartesian product"
         assert "BroadcastNestedLoopJoin" not in plan, f"{name}: NLJ"
 
@@ -790,7 +796,7 @@ def test_round12_dedup_additions_plan_shape(spark, sf_dir):
       (both sides grow with the corpus — the minhash_lsh_neardup contract),
       no cartesian, no NLJ.
     - dedup_governance_pipeline: no cartesian/NLJ anywhere in the chain
-      (the pair block's SHJ lives behind its lazy localCheckpoint, as in
+      (the pair block's SMJ lives behind its lazy localCheckpoint, as in
       neardup_cluster_quality — see test_governance_pair_family_plan_shape).
     - minhash_banding_recall_curve: the ONLY nested-loop join is the 1-row
       n_truth scalar broadcast (the documented crossJoin-scalar idiom);

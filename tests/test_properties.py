@@ -6,6 +6,8 @@
   generation misses no true pair on the fixture).
 - sample_bernoulli (queries/projections.py): sampled fraction within a
   5-sigma binomial CI, seed determinism, and seed sensitivity.
+- self_join_cohour_pairs (queries/joins.py): the closed-form C(n, 2) count
+  must equal the literal bucket self-join it replaced, run in Spark.
 """
 
 from __future__ import annotations
@@ -182,3 +184,35 @@ def test_subset_cap_predicate_matches_duckdb(spark, duck):
             # binomial(n, cap/n): the subset tracks the cap within 4 sigma
             sigma = (n * (cap / n) * (1 - cap / n)) ** 0.5
             assert abs(len(spark_ids) - cap) < 4 * sigma
+
+
+# ---------------------------------------------------- self_join_cohour_pairs
+
+
+def test_cohour_pairs_closed_form_equals_spark_self_join(spark, sf_dir):
+    """The registered query counts C(n, 2) pairs per (day, hour) bucket;
+    the oracle keeps the literal self-join, but in DuckDB only. Build the
+    self-join in Spark too, so Spark's self-join path stays exercised, and
+    pin row equality with the closed form."""
+    e = load(spark, sf_dir, "events")
+    hourly = e.select(
+        F.date_format("ts", "yyyy-MM-dd").alias("d"),
+        F.hour("ts").cast("int").alias("h"),
+        "user_id",
+    ).distinct()
+    a, b = hourly.alias("a"), hourly.alias("b")
+    join_form = (
+        a.join(
+            b,
+            (F.col("a.d") == F.col("b.d"))
+            & (F.col("a.h") == F.col("b.h"))
+            & (F.col("a.user_id") < F.col("b.user_id")),
+        )
+        .groupBy(F.col("a.d").alias("d"), F.col("a.h").alias("h"))
+        .agg(F.count(F.lit(1)).alias("n_pairs"))
+    )
+    closed = get_specs()["self_join_cohour_pairs"].fn(spark, sf_dir)
+    want = sorted(tuple(r) for r in join_form.collect())
+    got = sorted(tuple(r) for r in closed.collect())
+    assert want, "no co-hour pairs at this tier — vacuous check"
+    assert got == want
